@@ -27,6 +27,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["DT", "N", "GRP", "fread_parquet", "fsort",
            "format_dt", "print_dt", "set_print_options",
@@ -711,12 +712,60 @@ _TABLE_ORDER = {
 }
 
 
-# events.parquet stores ts as parquet TIMESTAMP(NANOS). How Spark surfaces
-# that column changed across major versions:
-#   - Spark 3.x with spark.sql.legacy.parquet.nanosAsLong=true: int64 nanos.
-#   - Spark 4.x: the conf was removed; the column arrives as TIMESTAMP_NTZ,
-#     truncated to micros (same floor-to-µs DuckDB applies on read, so the
-#     oracle agrees).
+def _struct(ddl: str) -> T.StructType:
+    types = {
+        "int": T.IntegerType(), "bigint": T.LongType(),
+        "double": T.DoubleType(), "string": T.StringType(),
+        "timestamp_ntz": T.TimestampNTZType(),
+        "array<float>": T.ArrayType(T.FloatType()),
+    }
+    return T.StructType([
+        T.StructField(name, types[dtype])
+        for name, dtype in (f.split() for f in ddl.split(","))
+    ])
+
+
+# The declared table contract: the Spark schema of each TESTDATA.md table
+# exactly as Spark 4 reads its parquet footer (names, order, types, all
+# nullable). Reads of these tables pass it to the reader instead of
+# launching a footer-inference job per table; names outside the contract
+# keep inference. Pinned against every testdata SF and the benchmark's
+# generated tables by tests/test_table_contract.py.
+TABLE_SCHEMAS = {name: _struct(ddl) for name, ddl in {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int,"
+                " c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int,"
+                " s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string,"
+            " p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
+              " o_totalprice double, o_orderdate timestamp_ntz,"
+              " o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
+                " l_linenumber int, l_quantity double, l_extendedprice double,"
+                " l_discount double, l_tax double, l_returnflag string,"
+                " l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint,"
+              " event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string,"
+                 " n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}.items()}
+
+
+# events.ts has two physical layouts, and Spark reads them differently:
+#   - INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false): TIMESTAMP_NTZ. This is
+#     the layout of every testdata SF (sf0.001, sf0.01, sf0.1), of the
+#     benchmark's generated tables (perfbench/datagen.py) and of the
+#     Spark-written copies (bench.scan_parallel_copy,
+#     tools/make_scale_data.py), and the one TABLE_SCHEMAS declares.
+#   - INT64 TIMESTAMP(NANOS): Spark 4.1 refuses it (PARQUET_TYPE_ILLEGAL)
+#     unless spark.sql.legacy.parquet.nanosAsLong=true, which reads it as
+#     int64 nanos. Such a file is outside the declared contract: read it
+#     with footer inference under that conf and pass the frame through
+#     derive_event_time.
 # _EPOCH_US_FROM_NTZ converts the NTZ wall clock to epoch micros WITHOUT
 # consulting spark.sql.session.timeZone (unix_date/hour/minute/date_part on
 # NTZ are pure wall-clock field extractions), so the result is identical on
@@ -732,10 +781,9 @@ _EPOCH_US_FROM_NTZ = (
 def derive_event_time(df: DataFrame) -> DataFrame:
     """Normalize the raw events frame to the engine's event-time contract:
     ``ts_us`` bigint epoch-micros, ``ts_ns`` bigint epoch-nanos, ``ts``
-    TimestampType (micros instant). Handles both physical readings of the
-    parquet TIMESTAMP(NANOS) column (int64 nanos on nanosAsLong-capable
-    Sparks; TIMESTAMP_NTZ on Spark 4+, where sub-µs precision is already
-    floored away by the reader)."""
+    TimestampType (micros instant). Handles both readings of the parquet
+    ts column (see the layout note above): TIMESTAMP_NTZ from a MICROS
+    file, int64 nanos from a NANOS file read with nanosAsLong."""
     from pyspark.sql.types import LongType, TimestampNTZType
 
     dtype = df.schema["ts"].dataType
@@ -772,17 +820,18 @@ def derive_event_time(df: DataFrame) -> DataFrame:
 
 
 class Tables:
-    """Lazy table registry — reads each parquet footer only on first access
-    (the reference's tables() catalog role, R/tables.R:31)."""
+    """Lazy table registry (the reference's tables() catalog role,
+    R/tables.R:31). A table is read on first access with its declared
+    schema from TABLE_SCHEMAS, so building it launches no Spark job; a
+    name outside the contract falls back to parquet footer inference."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
         self._cache: dict[str, DT] = {}
-        # Harmless on Spark 4 (the conf is gone; set of an unknown legacy
-        # key is accepted); required on 3.x so TIMESTAMP(NANOS) reads as
-        # int64 instead of erroring. derive_event_time sniffs whichever
-        # dtype actually arrives.
+        # footer inference (names outside the contract) of a
+        # TIMESTAMP(NANOS) column errors on Spark 4.1 without this conf
+        # and reads int64 nanos with it
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
@@ -790,7 +839,10 @@ class Tables:
 
     def __getitem__(self, name: str) -> DT:
         if name not in self._cache:
-            df = self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+            reader = self.spark.read
+            if name in TABLE_SCHEMAS:
+                reader = reader.schema(TABLE_SCHEMAS[name])
+            df = reader.parquet(f"{self.sf_dir}/{name}.parquet")
             if name == "events":
                 # ts_us matches DuckDB's epoch_us(ts) exactly on every
                 # supported read path — use it in oracle-compared

@@ -37,10 +37,11 @@ _DEFAULTS = {
     # small-dim broadcast threshold: region/nation/customer/supplier/part
     # are broadcastable at any realistic SF; lineitem/orders never are.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # events.ts is parquet TIMESTAMP(NANOS). On Spark 3.x this conf reads
-    # it losslessly as int64 nanos; Spark 4 REMOVED the conf (the set is
-    # silently accepted, the column arrives TIMESTAMP_NTZ µs-floored).
-    # core.derive_event_time handles both physical readings.
+    # events.ts is INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false) in the
+    # testdata and benchmark layouts (see the layout note in core), read
+    # as TIMESTAMP_NTZ. This conf only matters for a TIMESTAMP(NANOS)
+    # file: Spark 4.1 refuses one without it and reads int64 nanos with
+    # it. core.derive_event_time handles both readings.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # bucketed saveAsTable output (setkey-durable tables) lands in-repo
     "spark.sql.warehouse.dir": "/root/repo/.tmp/warehouse",

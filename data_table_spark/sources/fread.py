@@ -17,18 +17,37 @@ Feature mapping (reference -> here):
 Type detection intentionally delegates to Spark: fread's sampled type
 ladder (logical<int<int64<double<char, src/fread.c:"type bumping") is
 what `inferSchema` does distributedly.
+
+Line path: unless blank_lines_skip=False on clean input, the read
+cleans lines before the csv parser sees them (blank lines dropped, NUL
+bytes stripped, comment lines removed, whitespace runs collapsed for
+aligned files). The lines are a JVM Dataset (`spark.read.text`), the
+cleaning is Column expressions, and the parse is
+`DataFrameReader.csv(Dataset[String])`, so no line passes through a
+Python worker. The exceptions need a file-order index or Python's csv
+module: skip=, nrows= and the fill= width count.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as _F
 from pyspark.sql import types as T
 
 from ..core import DT
 
 _SEPS = [",", "\t", ";", "|", " "]
+
+# Python's str.isspace set (29 characters): what str.strip() trims and
+# re's \s matches. Java's String.trim and regex \s cover different sets.
+_WS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009"
+    "\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+_WS_RUN = "[" + "".join(f"\\u{ord(c):04x}" for c in _WS) + "]+"
 
 _TYPE_MAP = {
     "logical": T.BooleanType(),
@@ -107,8 +126,6 @@ def _retype_strings(df):
     try_cast to bigint / to double; columns with zero failures cast to
     the narrowest clean type. Exact (whole column, not sampled — the
     repo rule for type promises)."""
-    from pyspark.sql import functions as _F
-
     cols = [f.name for f in df.schema.fields
             if isinstance(f.dataType, T.StringType)]
     if not cols:
@@ -137,6 +154,28 @@ def _retype_strings(df):
         elif row[f"bd_{c}"] == 0:
             casts[c] = _F.col(c).cast("double")
     return df.withColumns(casts) if casts else df
+
+
+def _keep_lines(lines: DataFrame, keep) -> DataFrame:
+    """The lines whose 0-based file-order index passes ``keep``.
+    zipWithIndex exists only on the RDD API, so this one step runs in
+    Python workers; the line stream returns to the JVM afterwards."""
+    rdd = (
+        lines.rdd.zipWithIndex()
+        .filter(lambda t: keep(t[1]))
+        .map(lambda t: t[0])
+    )
+    return lines.sparkSession.createDataFrame(rdd, lines.schema)
+
+
+def _read_csv(reader, src: str | DataFrame) -> DataFrame:
+    """``reader.csv`` over a path, or over a line Dataset through the
+    JVM ``DataFrameReader.csv(Dataset[String])`` — the call pyspark's
+    own RDD branch ends in, minus the trip through Python workers."""
+    if isinstance(src, str):
+        return reader.csv(src)
+    jlines = getattr(src._jdf, "as")(reader._spark._jvm.Encoders.STRING())
+    return reader._df(reader._jreader.csv(jlines))
 
 
 def _looks_numeric(tok: str) -> bool:
@@ -365,8 +404,6 @@ def fread(
             comment_char=comment_char, multiline=multiline,
             blank_lines_skip=blank_lines_skip, line_sep=line_sep,
         )
-        from pyspark.sql import functions as _F
-
         df = back.df
         if want:
             for name, cls in want.items():
@@ -770,89 +807,84 @@ def fread(
         # are skipped by the scan itself (no extra pass; comments never
         # count toward nrows because they never become rows)
         reader = reader.option("comment", comment_char)
+    # line path: a JVM Dataset of lines (spark.read.text), cleaned with
+    # Column expressions and handed to the csv reader as a
+    # Dataset[String]. Only the file-order steps (skip=, nrows=, the
+    # header drop of fill=) leave the JVM: zipWithIndex has no
+    # DataFrame equivalent.
     lines = None
     utf8 = encoding.upper().replace("-", "").replace("_", "") == "UTF8"
     line_path = not (multiline or multiline_charset)
 
-    def _line_rdd():
+    def _lines():
+        if lines is not None:
+            return lines
+        r = spark.read
         if line_sep:
-            return (
-                spark.read.option("lineSep", line_sep)
-                .text(path)
-                .rdd.map(lambda r: r[0])
-            )
-        return spark.sparkContext.textFile(path)
+            r = r.option("lineSep", line_sep)
+        return r.text(path)
 
     if line_sep and line_path:
         # a non-default line terminator never reaches the native csv
-        # scan correctly; always go through the line RDD
-        lines = _line_rdd()
+        # scan correctly; always go through the line path
+        lines = _lines()
     if skip and line_path:
         # OSS Spark's csv reader has no skip-lines option (CSVOptions
         # has none; unknown options are silently ignored), so feed the
-        # reader an RDD of lines with the first `skip` dropped.
-        # zipWithIndex follows file order for a single file; for a
-        # directory the skip applies to the concatenated file order.
-        lines = (
-            (lines if lines is not None else _line_rdd())
-            .zipWithIndex()
-            .filter(lambda t: t[1] >= skip)
-            .map(lambda t: t[0])
-        )
+        # reader the lines with the first `skip` dropped. zipWithIndex
+        # follows file order for a single file; for a directory the
+        # skip applies to the concatenated file order.
+        lines = _keep_lines(_lines(), lambda i, _s=skip: i >= _s)
     if blank_lines_skip and line_path and utf8:
         # blank.lines.skip: the reference's FALSE default stops the
         # read at the first interior blank line (with a warning) and
         # silently drops trailing ones — neither is expressible in a
         # distributed scan, and Spark's own behavior (a null row per
         # blank line) matches nothing a reference user expects, so the
-        # default here is True: drop blank LINES before parsing. Costs
-        # the native file scan (line-RDD input); pass
+        # default here is True: drop blank LINES before parsing. A
+        # blank line is one Python's str.strip() empties; Java's trim
+        # misses \x85, \xa0 and the U+2000 block, hence the explicit
+        # set. Costs the native file scan (line Dataset input); pass
         # blank_lines_skip=False on guaranteed-clean input to keep it.
-        lines = (
-            lines if lines is not None else _line_rdd()
-        ).filter(lambda ln: ln.strip() != "")
+        lines = _lines().filter(_F.btrim("value", _F.lit(_WS)) != "")
     if line_path and (nul_strip or lines is not None):
         # embedded NUL bytes (reference src/fread.c skips them ANYWHERE
         # in the file, tests.Rraw 2025.x): strip before parse. Applied
-        # unconditionally whenever a line RDD is already materialized —
-        # one cheap str.replace per line, and the default
-        # blank_lines_skip path always materializes one, so NULs past
-        # the 50-line driver sample (or in reads with explicit
-        # sep+header, which take no sample at all) are still stripped
-        # (r9 ADVICE). The sample gate only decides whether a NUL alone
-        # FORCES the line-RDD path. Residual documented gap: explicit
-        # sep+header WITH blank_lines_skip=False keeps the native csv
-        # scan, where unsampled NULs reach the parser unstripped —
-        # stripping there would cost every clean read its native scan.
-        lines = (lines if lines is not None else _line_rdd()).map(
-            lambda ln: ln.replace("\x00", "")
+        # unconditionally on the line path — one regexp_replace per
+        # line, and the default blank_lines_skip path always takes it,
+        # so NULs past the 50-line driver sample (or in reads with
+        # explicit sep+header, which take no sample at all) are still
+        # stripped (r9 ADVICE). The sample gate only decides whether a
+        # NUL alone FORCES the line path. Residual documented gap:
+        # explicit sep+header WITH blank_lines_skip=False keeps the
+        # native csv scan, where unsampled NULs reach the parser
+        # unstripped — stripping there would cost every clean read its
+        # native scan.
+        lines = _lines().select(
+            _F.regexp_replace("value", r"\x00", "").alias("value")
         )
     if comment_char is not None and line_path and (
         lines is not None or nrows is not None
     ):
-        # whenever a line RDD is (or must be) materialized, drop
-        # comment lines there too so line-counted features (nrows=,
-        # fill width derivation) never count them (tests.Rraw 2341.15);
-        # the native-scan path needs no filter — the csv comment
-        # option skips them at parse
-        lines = (lines if lines is not None else _line_rdd()).filter(
-            lambda ln, _c=comment_char: not ln.startswith(_c)
-        )
+        # on the line path, drop comment lines before the csv reader
+        # so line-counted features (nrows=, fill width derivation)
+        # never count them (tests.Rraw 2341.15); the native-scan path
+        # needs no filter — the csv comment option skips them at parse
+        lines = _lines().filter(~_F.col("value").startswith(comment_char))
     if ws_mode and line_path:
-        import re as _re
-
-        base = lines if lines is not None else _line_rdd()
-        lines = base.map(lambda ln: _re.sub(r"\s+", "\x1f", ln.strip()))
+        # str.strip() then re.sub(r"\s+") in Python terms: both the trim
+        # and the run class are the str.isspace set, not Java's \s
+        lines = _lines().select(
+            _F.regexp_replace(
+                _F.btrim("value", _F.lit(_WS)), _WS_RUN, "\x1f"
+            ).alias("value")
+        )
     if nrows is not None and lines is not None:
         # restrict BEFORE parse/inference: the reference's streaming
         # parser never reads past nrows, so a ragged/malformed tail
         # must neither error the read nor contaminate inferred types
         keep = nrows + (1 if header else 0)
-        lines = (
-            lines.zipWithIndex()
-            .filter(lambda t: t[1] < keep)
-            .map(lambda t: t[0])
-        )
+        lines = _keep_lines(lines, lambda i, _k=keep: i < _k)
 
     widened = None
     if fill and lines is not None and not col_classes and not col_names:
@@ -872,8 +904,8 @@ def fread(
             except Exception:
                 return ln.count(_sep) + 1
 
-        n_max = lines.map(_nf).max()
-        first_line = lines.first()
+        n_max = lines.rdd.map(lambda r: _nf(r[0])).max()
+        first_line = lines.first()[0]
         head_fields = (
             first_line.split(csv_sep)
             if not quote
@@ -884,11 +916,7 @@ def fread(
                 base = [str(x) for x in head_fields]
                 # drop the header line from the data RDD (the explicit
                 # schema below disables Spark's own header handling)
-                lines = (
-                    lines.zipWithIndex()
-                    .filter(lambda t: t[1] >= 1)
-                    .map(lambda t: t[0])
-                )
+                lines = _keep_lines(lines, lambda i: i >= 1)
             else:
                 base = []
             names = base + [
@@ -921,7 +949,7 @@ def fread(
         # schema replacement would silently drop/misparse every
         # undeclared column.
         probe = reader.option("inferSchema", "true")
-        inferred = (probe.csv(lines) if lines is not None else probe.csv(path)).schema
+        inferred = _read_csv(probe, lines if lines is not None else path).schema
         names = list(col_names) if col_names else [f.name for f in inferred.fields]
         if len(names) != len(inferred.fields):
             raise ValueError(
@@ -953,10 +981,8 @@ def fread(
     else:
         deferred_casts = {}
         reader = reader.option("inferSchema", "true")
-    df = reader.csv(lines) if lines is not None else reader.csv(path)
+    df = _read_csv(reader, lines if lines is not None else path)
     if scalar_class is not None and scalar_class != "character":
-        from pyspark.sql import functions as _F
-
         t = _TYPE_MAP.get(scalar_class, T.StringType())
         df = df.withColumns({c: _F.col(c).cast(t) for c in df.columns})
     if df.columns and df.columns[0].startswith("﻿"):
@@ -976,8 +1002,6 @@ def fread(
         # Spark's csv nullValue is single-valued; normalize the rest
         # post-read. String columns nullify by match; typed columns
         # already yielded null when the token failed their parse/cast.
-        from pyspark.sql import functions as _F
-
         extra = [s for s in na_strings[1:]]
         updates = {
             fld.name: _F.when(
@@ -989,8 +1013,6 @@ def fread(
         if updates:
             df = df.withColumns(updates)
     if deferred_casts:
-        from pyspark.sql import functions as _F
-
         df = df.withColumns(
             {nm: _F.col(nm).cast(t) for nm, t in deferred_casts.items()}
         )
@@ -1007,8 +1029,6 @@ def fread(
         # equivalent is one min/max aggregate over the parsed frame
         # (exact, not sampled — a sample-based promise could be wrong
         # at the 100 TB tail).
-        from pyspark.sql import functions as _F
-
         int_cols = [
             f.name for f in df.schema.fields
             if isinstance(f.dataType, (T.IntegerType, T.LongType))

@@ -36,28 +36,15 @@ from pyspark.sql import types as T
 
 _RUN_COUNTER = itertools.count()
 
-def _events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """File streams require a declared schema; the physical type of the
-    TIMESTAMP(NANOS) ts column depends on the Spark version (int64 nanos
-    under 3.x nanosAsLong, TIMESTAMP_NTZ on 4.x). Probe the parquet
-    footer with a batch read — cheap, no data scan — and declare exactly
-    what this Spark will produce, so the stream and batch readers agree
-    to the microsecond."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet: same derivation as the
     batch loader (core.derive_event_time: ts_us/ts_ns bigint + micros
     timestamp ts), so batch and stream agree to the microsecond."""
-    from ..core import derive_event_time
+    from ..core import TABLE_SCHEMAS, derive_event_time
 
     raw = _parquet_stream(
-        spark.readStream.schema(_events_schema(spark, sf_dir)),
+        spark.readStream.schema(TABLE_SCHEMAS["events"]),
         sf_dir,
         "events.parquet",
     )
@@ -77,21 +64,14 @@ def _parquet_stream(reader, sf_dir: str, name: str) -> DataFrame:
     return reader.option("pathGlobFilter", name).parquet(sf_dir)
 
 
-DOCUMENTS_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-    T.StructField("source", T.StringType()),
-    T.StructField("n_chars", T.LongType()),
-])
-
-
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (the continuous-
     ingest posture of a training-data pipeline: each arriving file is a
     micro-batch of new documents)."""
+    from ..core import TABLE_SCHEMAS
+
     return _parquet_stream(
-        spark.readStream.schema(DOCUMENTS_SCHEMA), sf_dir,
+        spark.readStream.schema(TABLE_SCHEMAS["documents"]), sf_dir,
         "documents.parquet",
     )
 

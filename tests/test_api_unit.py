@@ -402,11 +402,8 @@ def test_frollapply_null_window(spark):
     assert rows[1] is None and rows[2] is None  # incomplete windows
 
 
-def test_fread_skip_lines(spark):
-    import os
-
-    os.makedirs("/root/repo/.tmp", exist_ok=True)
-    p = "/root/repo/.tmp/skip.csv"
+def test_fread_skip_lines(spark, tmp_path):
+    p = str(tmp_path / "skip.csv")
     with open(p, "w") as f:
         f.write("garbage preamble\nmore garbage\nk,v\n1,a\n2,b\n")
     from data_table_spark.sources import fread
@@ -1335,9 +1332,9 @@ def test_stream_neardup_screen_finds_planted_dup(spark):
     permutations → stream-static join actually hits)."""
     import tempfile
 
+    from data_table_spark.core import TABLE_SCHEMAS
     from data_table_spark.pipeline.dedup import lsh_band_index
     from data_table_spark.streaming import (
-        DOCUMENTS_SCHEMA,
         run_available_now,
         stream_neardup_screen,
     )
@@ -1350,10 +1347,10 @@ def test_stream_neardup_screen_finds_planted_dup(spark):
         (2, near, "en", "srcA", len(near)),
         (3, far, "en", "srcB", len(far)),
     ]
-    docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    docs = spark.createDataFrame(rows, TABLE_SCHEMAS["documents"])
     with tempfile.TemporaryDirectory() as d:
         docs.coalesce(1).write.mode("overwrite").parquet(f"{d}/docs")
-        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(f"{d}/docs")
+        stream = spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(f"{d}/docs")
         out = run_available_now(
             stream_neardup_screen(stream, docs, n=3, threshold=0.8)
         ).collect()
@@ -2006,8 +2003,8 @@ def test_stream_span_screen_coverage(spark):
     count, unmatched docs are absent, short docs produce no grams."""
     import tempfile
 
+    from data_table_spark.core import TABLE_SCHEMAS
     from data_table_spark.streaming import (
-        DOCUMENTS_SCHEMA,
         run_available_now,
         stream_span_screen,
     )
@@ -2021,13 +2018,13 @@ def test_stream_span_screen_coverage(spark):
         (3, "u v w x y", "en", "s", 5),       # no match -> absent
         (4, "a b c", "en", "s", 3),           # < n tokens -> absent
     ]
-    docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    docs = spark.createDataFrame(rows, TABLE_SCHEMAS["documents"])
     ref = spark.createDataFrame(
         [("a b c d",), ("b c d e",), ("c d e f",)], ["g"]
     )
     with tempfile.TemporaryDirectory() as d:
         docs.coalesce(1).write.mode("overwrite").parquet(f"{d}/docs")
-        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(f"{d}/docs")
+        stream = spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(f"{d}/docs")
         out = run_available_now(stream_span_screen(stream, ref, n=4)).collect()
     got = {
         r.doc_id: (r.n_tokens, r.dup_tokens, r.dup_frac) for r in out

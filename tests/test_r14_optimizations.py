@@ -165,8 +165,8 @@ def test_spread_stream_is_row_preserving(spark):
     result through it is the exact row multiset of the batch input."""
     import tempfile
 
+    from data_table_spark.core import TABLE_SCHEMAS
     from data_table_spark.streaming import (
-        DOCUMENTS_SCHEMA,
         run_available_now,
         spread_stream,
     )
@@ -174,10 +174,10 @@ def test_spread_stream_is_row_preserving(spark):
     rows = [
         (i, f"text {i} body words", "en", "src", 20) for i in range(25)
     ]
-    docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    docs = spark.createDataFrame(rows, TABLE_SCHEMAS["documents"])
     with tempfile.TemporaryDirectory() as d:
         docs.coalesce(1).write.mode("overwrite").parquet(f"{d}/docs")
-        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(
+        stream = spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(
             f"{d}/docs"
         )
         out = run_available_now(

@@ -9,6 +9,10 @@ partitions) exactly like the driver's — the partition-invariance /
 session-agnosticism gate. Results must be identical to the tuned
 session; round 1's gforce_var_sd hash-drift and events-nanos errors
 were only visible this way.
+
+Before the queries, every table's declared schema (core.TABLE_SCHEMAS,
+which the loaders pass instead of inferring) is checked against parquet
+footer inference on the same session; a mismatch counts as a failure.
 """
 
 from __future__ import annotations
@@ -19,11 +23,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def norm_cell(v):
@@ -170,8 +169,19 @@ def main():
         from data_table_spark import get_spark
 
         spark = get_spark("correctness-check")
+    from data_table_spark.core import TABLE_SCHEMAS
+
+    n_pass = n_fail = n_rows_only = n_margin = 0
+    for t, declared in TABLE_SCHEMAS.items():
+        inferred = spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
+        if declared != inferred:
+            print(f"FAIL contract {t}: declared {declared.simpleString()}"
+                  f" vs footer {inferred.simpleString()}")
+            n_fail += 1
+    print(f"contract: {len(TABLE_SCHEMAS) - n_fail}/{len(TABLE_SCHEMAS)}"
+          " declared table schemas match footer inference")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_SCHEMAS:
         # driver testdata ships single files; Spark-written data (e.g.
         # tools/make_scale_data.py output) is a directory of part files
         path = f"{sf_dir}/{t}.parquet"
@@ -181,7 +191,6 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_rows_only = n_margin = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
