@@ -14,9 +14,12 @@ Design rules (scale-first):
   the shingle — the shuffle key is the shingle, PPJoin-style), LSH blocks
   on (band, band-hash), SimHash blocks on band equality (pigeonhole
   guarantee for hamming <= k with k+1 bands).
-- Everything stays in built-in Spark functions (whole-stage codegen);
-  the ONLY Python is the SimHash pandas UDF, kept as the documented
-  §2.11 Arrow-batched escape-hatch demonstration.
+- Everything stays in built-in Spark functions (whole-stage codegen),
+  SimHash included. Python runs only where Arrow-batched numpy beats an
+  interpreted array fold or the data is binary: the streaming near-dup
+  screen's MinHash `pandas_udf`, the embedding operators' norm,
+  hyperplane-projection, pair-cosine and centroid-assignment
+  `pandas_udf`s, and the multimodal `mapInPandas` stages.
 - Every operator that feeds the correctness gate computes a formula that
   is engine-portable (md5, integer arithmetic, single final division) so
   the DuckDB oracle reproduces it bit-for-bit.

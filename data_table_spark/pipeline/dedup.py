@@ -21,6 +21,15 @@ Scale design (the point of these over naive all-pairs):
   pigeonhole, any pair with hamming distance <= 3 agrees on >= 1 band,
   so band-blocking is EXACT for hd<=3 (no recall loss).
 
+Verification: the candidate generators (`minhash_lsh_pairs`,
+`jaccard_prefix_pairs`) only filter globally; every candidate pair is
+then verified by the one row-local kernel, `_jaccard_verify`.
+`ngram_jaccard_pairs` needs no verify step (its blocking join already
+counts |A ∩ B|), and the streaming screen verifies against
+`lsh_band_index(with_shingles=True)`, whose payload is the kernel's
+per-doc set (`_doc_sets`). Every path scores with `_jaccard`: exact
+integer counts and one division, bit-identical to the oracle.
+
 Reference parity: data.table's only dedup surface is exact
 (`duplicated`/`unique`, /root/reference/R/duplicated.R:1-60); the rest is
 the north-star extension.
@@ -31,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens_col, word_shingles
+from .text import tokens_col
 
 # MinHash parameters. b*r = 126 permutations; threshold curve midpoint
 # (1/b)^(1/r) ≈ 0.60. r=6 keeps band-collision odds for UNRELATED pairs
@@ -104,13 +113,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def _shingle_table(docs: DataFrame, n: int = 3) -> DataFrame:
-    toks = tokens_col("text")
-    return spread(docs).select(
-        "doc_id", word_shingles(toks, n).alias("shingles")
-    ).withColumn("sz", F.size("shingles"))
-
-
 def positional_ngrams(docs: DataFrame, n: int = 3) -> DataFrame:
     """POSITIONAL word-n-gram rows (doc_id, pos, g): one row per
     starting token position (0-based), NOT distinct — positions matter
@@ -154,8 +156,69 @@ def shingle_rows(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def shingle_sizes(sr: DataFrame) -> DataFrame:
-    return sr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+def _jaccard(inter: Column, sa: Column, sb: Column) -> Column:
+    """|A ∩ B| / (|A| + |B| - |A ∩ B|) from exact integer counts — one
+    division, so the double is bit-identical to the oracle's."""
+    return inter.cast("double") / (sa + sb - inter)
+
+
+def _doc_sets(sr: DataFrame) -> DataFrame:
+    """(doc_id, ss, sz): each document's distinct shingle rows as ONE
+    sorted array plus its size. Documents are length-bounded, so the
+    array is a bounded row, not a corpus-scale one."""
+    return sr.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("s")).alias("ss"),
+        F.count("s").alias("sz"),
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, sr: DataFrame, threshold: float,
+    hint: str | None = None,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs (doc_a, doc_b)
+    against the distinct shingle rows `sr`: join each side's
+    `_doc_sets` row, |A ∩ B| = size(array_intersect) row-locally, keep
+    jaccard >= threshold. Output: (doc_a, doc_b, jaccard).
+
+    Why row-local (r15, measured on `jaccard_prefix_pairs` at sf1): the
+    relational form (explode each candidate into |A| membership rows,
+    join the shingle rows, a pair-grouped hash aggregate) took 26.5s of
+    the 27.4s query for 2.29M candidates; this form shuffles each
+    candidate twice carrying one array and has no pair-grouped
+    aggregate — 0.38x. Same exact integers, hence identical doubles.
+
+    ``hint`` is a join hint for the two set-side joins (None lets AQE
+    decide from runtime sizes)."""
+    sets = _doc_sets(sr)
+    if hint is not None:
+        sets = sets.hint(hint)
+
+    def side(d: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{d}"),
+            F.col("ss").alias(f"ss{d}"),
+            F.col("sz").alias(f"s{d}"),
+        )
+
+    ver = (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("ssa", "ssb")).alias("inter"),
+            "sa",
+            "sb",
+        )
+    )
+    return (
+        ver.withColumn(
+            "jaccard", _jaccard(F.col("inter"), F.col("sa"), F.col("sb"))
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -165,8 +228,8 @@ def ngram_jaccard_pairs(
     blocking (no cross join). Output: (doc_a, doc_b, jaccard) with
     doc_a < doc_b and jaccard >= threshold.
 
-    jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) — exact ints, one division,
-    bit-identical to the oracle."""
+    The blocking join's per-pair row count IS |A ∩ B|, so there is no
+    separate verify step; the score is `_jaccard` over that count."""
     # NOTE: no persist() here — caching pins the static shuffle
     # partitioning and disables AQE coalescing above it, which measured
     # slower than recomputing this cheap codegen pipeline. Instead
@@ -199,9 +262,7 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("sa") + F.col("sb") - F.col("inter")
-    )
+    jac = _jaccard(F.col("inter"), F.col("sa"), F.col("sb"))
     return (
         inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
@@ -465,25 +526,6 @@ def _perm_min_aggs() -> list[Column]:
     ]
 
 
-def minhash_signature(shingles: Column) -> Column:
-    """126-permutation MinHash signature as an array<long> (array-column
-    form for API parity; `minhash_lsh_pairs` uses the faster relational
-    encoding of the same permutations — see _perm_min_aggs)."""
-    hs = F.transform(
-        shingles, lambda s: F.xxhash64(s).bitwiseAND(F.lit(_P31))
-    )
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hs, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_P31))
-                )
-            )
-            for a, b in zip(_PERM_A, _PERM_B)
-        ]
-    )
-
-
 def lsh_band_index(
     docs: DataFrame, n: int = 3, with_shingles: bool = False,
     sr: DataFrame | None = None,
@@ -501,11 +543,13 @@ def lsh_band_index(
     tokens have no shingles and no index rows (they cannot near-dup).
 
     ``with_shingles`` additionally attaches the per-doc distinct
-    shingle SET (collect_set over the shingle rows) as an array column
-    `sh` — the join-time verification payload for the streaming screen,
-    where Spark's single-streaming-aggregation limit rules out the
-    batch onepass roll-up. Batch callers should leave it off: arrays
-    riding a candidate shuffle was the r2 OOM lesson.
+    shingle set (the `_doc_sets` sorted array) as an array column `sh`
+    — the join-time verification payload for the streaming screen,
+    which verifies each stream-static candidate row-locally against
+    it. Batch callers leave it off — arrays riding every band row
+    through the band shuffle was the r2 OOM lesson — and verify after
+    the band join with `_jaccard_verify`, whose arrays ride only the
+    candidate pairs.
 
     ``sr`` (r14 optimization) lets a caller that ALSO consumes the
     shingle rows pass its own (typically exchange-anchored) shingle
@@ -530,61 +574,53 @@ def lsh_band_index(
         "doc_id", F.expr(f"explode(array({band_structs})) as bb")
     ).select("doc_id", "bb.band", "bb.bh")
     if with_shingles:
-        sh = sr.groupBy("doc_id").agg(F.collect_set("s").alias("sh"))
+        sh = _doc_sets(sr).select("doc_id", F.col("ss").alias("sh"))
         bands = bands.join(sh, "doc_id")
     return bands
 
 
 def minhash_lsh_pairs(
     docs: DataFrame, threshold: float = 0.8, n: int = 3,
-    verify: str = "onepass", broadcast: str = "auto",
+    broadcast: str = "auto",
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs, exact-Jaccard-verified.
 
     signature -> 21 bands of 6 rows -> explode (band_idx, band_hash) ->
     self-equi-join on the band key (the ONLY shuffle over pairs) ->
-    distinct candidates -> exact Jaccard verification >= threshold.
-    Output schema matches `ngram_jaccard_pairs` (it computes the same
-    answer with near-certain probability, at LSH cost).
+    distinct candidates -> `_jaccard_verify` (exact Jaccard >=
+    threshold). Output schema matches `ngram_jaccard_pairs` (it
+    computes the same answer with near-certain probability, at LSH
+    cost).
 
-    ``verify`` picks the exact-verification strategy (identical output,
-    measured at sf0.1/local[32], interleaved 3-rep medians):
-    - "onepass" (default): explode candidates into (pair, doc, side)
-      memberships, broadcast-join the shingle rows ONCE, roll up side
-      flags. Minimum total work (2 shingle scans, no full-partition
-      size windows) — the saturated-cluster / 100 TB choice, and the
-      measured local winner too (median 4.4s warm / 5.1s cold vs
-      parallel's 5.2s / 8.9s; an earlier round measured the opposite
-      cold ordering — ambient noise on this box is ±50%, so the
-      scale-principled choice wins the tie).
-    - "parallel": per-side joins against the shingle rows. Recomputes
-      the shingle subtree per branch (3 scans total), but the branches
-      are independent stages Spark runs CONCURRENTLY with the signature
-      branch — worth trying on a cluster with idle slots.
-    (A persisted-shingles variant loses badly at this SF — persist()
-    disables AQE above the cache and pins 32-partition shuffles.
-    NEGATIVE RESULT, r15 session 2: porting jaccard_prefix_pairs' r15
-    row-local array_intersect verify here measured ~1.0x at sf1
-    (interleaved decomposition, quietest rep 8.2s onepass vs 8.6s
-    local; candidates-only 4.8s). LSH blocking already prunes to ~2.5k
-    candidates at sf1 — vs jaccard_prefix's 2.29M — so the pair-side
-    explode the local form removes is negligible here, and BOTH forms
-    pay the same second corpus-scale pass over the shingle rows
-    (membership join vs per-doc set aggregate). Do not re-try.)
+    Verification is the shared row-local kernel, a measured trade of a
+    little speed for one verification path. The relational "onepass"
+    verifier this replaced (explode candidates into (pair, doc, side)
+    memberships, join the shingle rows once, roll side flags up) was
+    ~1.05x faster at sf1 (r15 session 2, interleaved decomposition,
+    quietest rep 8.2s onepass vs 8.6s local; candidates-only 4.8s) and
+    ~1.16x faster at sf0.1 (warm best-of-4 medians over 3 alternating
+    processes on 4 cores: 2.28s vs 2.65s wall, 6.9s vs 9.2s CPU).
+    LSH blocking already prunes to ~2.5k candidates at sf1 — vs
+    jaccard_prefix's 2.29M — so the pair-side explode the local form
+    removes is negligible here, and BOTH forms pay the same second
+    corpus-scale pass over the shingle rows (membership join vs
+    per-doc set aggregate); the kernel cannot win on this generator,
+    and a second verifier is not worth its code for that margin.
+    Negative results, do not re-try: a per-side "parallel" verifier
+    (5.2s warm / 8.9s cold vs onepass 4.4s / 5.1s at sf0.1, r4); a
+    persisted-shingles variant (persist() disables AQE above the cache
+    and pins 32-partition shuffles); semi-joining the shingle rows to
+    the candidate doc ids before building the sets (slower at sf0.1).
 
-    ``broadcast`` governs how the onepass membership frame joins the
-    shingle rows. The candidate count scales with near-dup DENSITY,
-    not a constant — a dup-heavy 100 TB crawl can emit billions of
-    candidate pairs, which no driver broadcast holds — so the default
-    is "auto": no hint, AQE's runtime stats convert the join to
-    broadcast only when the membership side is actually under
-    spark.sql.adaptive.autoBroadcastJoinThreshold, and keep a shuffle
-    equi-join on doc_id otherwise (identical semantics, one extra
-    exchange, no size cliff). "force" restores the unconditional
-    F.broadcast hint (small corpora where even the first shuffle of
-    mem is not worth it); "never" pins the shuffle merge join (the
-    posture the `minhash_lsh_shuffle` driver twin runs against the
-    same oracle).
+    ``broadcast`` governs the two set-side verification joins. The
+    candidate count scales with near-dup DENSITY, not a constant — a
+    dup-heavy 100 TB crawl can emit billions of candidate pairs, which
+    no driver broadcast holds — so the default "auto" adds no hint:
+    AQE's runtime stats broadcast a side only when it is under
+    spark.sql.adaptive.autoBroadcastJoinThreshold and keep a shuffle
+    equi-join otherwise (identical semantics, no size cliff). "never"
+    pins SHUFFLE_MERGE on both joins (the posture the
+    `minhash_lsh_shuffle` query twin runs against the same oracle).
 
     r14 optimization (plan-shape, identical output): the r13 plan ran
     the shingle pipeline (posexplode + lead-window gram assembly +
@@ -595,7 +631,7 @@ def minhash_lsh_pairs(
     it. Two materialization points fix both:
     - the distinct shingle rows are lazily localCheckpoint'ed — one
       computation for the signature aggregate and the verification
-      join (an explicit repartition("doc_id") anchor is a silent
+      sets (an explicit repartition("doc_id") anchor is a silent
       no-op: the distinct's output is already hash(doc_id)-partitioned
       so the optimizer removes it, and the checkpoint also beat it for
       the shuffle twin, 0.86x);
@@ -612,6 +648,8 @@ def minhash_lsh_pairs(
     isnotnull(doc_id) into only one branch otherwise, which defeats
     exchange reuse — measured). Output-invariant: every emitted pair
     satisfies doc_a < doc_b, which a null doc_id can never do."""
+    if broadcast not in ("auto", "never"):
+        raise ValueError(f"bad broadcast: {broadcast}")
     sr = shingle_rows(
         docs.filter(F.col("doc_id").isNotNull()), n
     ).localCheckpoint(eager=False)
@@ -630,97 +668,8 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    if verify == "onepass":
-        # ONE pass over the shingle rows: explode candidates into
-        # (pair, doc, side) memberships (tiny — broadcast), join sr
-        # once, roll side flags up to |A|, |B|, intersection. sr is
-        # distinct per doc, so each (pair, s) sees at most one row per
-        # side: na/nb are 0/1 flags and na*nb marks an intersection.
-        mem = cand.select(
-            "doc_a",
-            "doc_b",
-            F.expr(
-                "explode(array(struct(doc_a as doc_id, 1 as a_side),"
-                " struct(doc_b as doc_id, 0 as a_side))) as m"
-            ),
-        ).select("doc_a", "doc_b", "m.doc_id", "m.a_side")
-        if broadcast == "force":
-            mem = F.broadcast(mem)
-        elif broadcast == "never":
-            mem = mem.hint("SHUFFLE_MERGE")
-        elif broadcast != "auto":
-            raise ValueError(f"bad broadcast: {broadcast}")
-        j = sr.join(mem, "doc_id")
-        per_s = j.groupBy("doc_a", "doc_b", "s").agg(
-            F.sum("a_side").alias("na"),
-            F.sum(1 - F.col("a_side")).alias("nb"),
-        )
-        ver = per_s.groupBy("doc_a", "doc_b").agg(
-            F.sum("na").alias("sa"),
-            F.sum("nb").alias("sb"),
-            F.sum(F.col("na") * F.col("nb")).alias("inter"),
-        )
-    else:
-        # per-side joins: expand candidates by A's shingle rows
-        # (carrying |A| via a per-doc count window), match against B's
-        # rows (carrying |B|), count matches per pair. The sr branches
-        # are independent and overlap the signature computation.
-        from pyspark.sql import Window as _W
-
-        szw = F.count(F.lit(1)).over(_W.partitionBy("doc_id"))
-        srz = sr.withColumn("sz", szw)
-        pa = srz.select(
-            F.col("doc_id").alias("doc_a"), "s", F.col("sz").alias("sa")
-        )
-        pb = srz.select(
-            F.col("doc_id").alias("doc_b"), "s", F.col("sz").alias("sb")
-        )
-        ver = (
-            cand.join(pa, "doc_a")
-            .join(pb, ["doc_b", "s"])
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("inter"),
-                F.first("sa").alias("sa"),
-                F.first("sb").alias("sb"),
-            )
-        )
-    jac = F.col("inter").cast("double") / (
-        F.col("sa") + F.col("sb") - F.col("inter")
-    )
-    return (
-        ver.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def simhash_col(shingles: Column) -> Column:
-    """48-bit SimHash over a shingle array, md5-based so the oracle can
-    reproduce it: feature hash = int(md5(s)[:12], 16); bit i of the
-    SimHash is set iff 2*(count of features with bit i set) > n_features.
-    (Array-column form; `simhash_table` computes the same hash
-    relationally for speed — array higher-order fns are interpreted.)"""
-    hs = F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    n = F.size(hs)
-    bits = [
-        F.when(
-            F.size(
-                F.filter(hs, lambda h: F.shiftright(h, i).bitwiseAND(1) == 1)
-            )
-            * 2
-            > n,
-            F.lit(1 << i).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for i in range(SIMHASH_BITS)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    hint = "SHUFFLE_MERGE" if broadcast == "never" else None
+    return _jaccard_verify(cand, sr, threshold, hint)
 
 
 def simhash_table(sr: DataFrame) -> DataFrame:
@@ -819,8 +768,8 @@ def jaccard_prefix_pairs(
     generation is lossless while the join input shrinks ~t-fold and,
     more importantly, hot (frequent) shingles mostly fall OUT of
     prefixes, collapsing the quadratic bucket blowup on common
-    shingles. Verification is the same relational exact-Jaccard count
-    as the LSH path.
+    shingles. Candidates are verified by the shared row-local
+    `_jaccard_verify` kernel, like the LSH path's.
 
     LOSSLESSNESS UNDER FLOAT: every ceil'd bound here subtracts _EPS
     first. t*|s| and t/(1+t)*(|A|+|B|) are float products whose last
@@ -897,56 +846,10 @@ def jaccard_prefix_pairs(
         )
         .distinct()
     )
-    # r15 optimization (guide §2.3 — VERDICT r14 item 3): verification
-    # was the measured bottleneck, NOT the prefix self-join. sf1
-    # decomposition: candidate join 1.4s -> 2.29M candidates, but the
-    # relational verify (cand x |A| explode through two joins + a
-    # 119M-row hash aggregate) took 26.5s of the 27.4s query. Verify
-    # row-LOCALLY instead: each doc's distinct shingle set is collected
-    # into one sorted array (a bounded row — documents are
-    # length-bounded, so |A| is too) and |A ∩ B| is computed per
-    # candidate pair with array_intersect — same exact integer, same
-    # sa/sb, hence the identical jaccard double and identical output
-    # (layout/oracle gates re-proved). The pair table shuffles each
-    # candidate twice carrying one array instead of exploding it into
-    # |A| rows, and no pair-grouped aggregate remains.
-    sets = sr.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("ss"),
-        F.count("s").alias("szv"),
-    )
-    ver = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("ss").alias("ssa"),
-                F.col("szv").alias("sa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("ss").alias("ssb"),
-                F.col("szv").alias("sb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("ssa", "ssb")).alias("inter"),
-            "sa",
-            "sb",
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("sa") + F.col("sb") - F.col("inter")
-    )
-    return (
-        ver.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # verification, not the prefix self-join, was this query's measured
+    # bottleneck at sf1 (r15: 1.4s to 2.29M candidates, then 26.5s of
+    # relational verify) — the row-local kernel is what fixed it
+    return _jaccard_verify(cand, sr, threshold)
 
 
 def _cc_checkpointer(df_like: DataFrame, mode: str, checkpoint_dir):
@@ -1116,13 +1019,13 @@ def dedup_clusters(
     (the cluster_id IS the keeper's doc_id). Reference has no analog
     (its dedup surface is exact `duplicated`; R/duplicated.R:1-60).
 
-    Algorithm: iterative min-label propagation over the symmetrized
-    edge list — labels[v] <- min(labels[v], min labels of neighbors) —
-    a fixpoint in O(component diameter) rounds. Near-dup graphs are
-    low-diameter (stars/cliques of rewrites), so this converges in a
-    handful of rounds; a billion-node skew-diameter graph would swap
-    in the large-star/small-star alternation (Kiveris et al., "CC in
-    MapReduce"), same join-agg building blocks. Scale mechanics:
+    Algorithm: chosen by ``strategy`` (below). The default "star" runs
+    the large-star/small-star alternation of `cc_star_labels` (Kiveris
+    et al., "CC in MapReduce"), O(log^2 n) rounds whatever the
+    component diameter. "label" runs iterative min-label propagation
+    over the symmetrized edge list — labels[v] <- min(labels[v], min
+    labels of neighbors) — a fixpoint in O(component diameter) rounds,
+    with the same join-agg building blocks. Scale mechanics of "label":
     - edges and labels are localCheckpoint()ed each round: truncated
       lineage keeps round k from re-running rounds 1..k-1 (and keeps
       the plan from growing), at the cost of materializing one
@@ -1321,7 +1224,6 @@ def line_dedup(
     order_col: str = "line_no",
     line_col: str = "line",
     line_sep: str = "\n",
-    broadcast: str = "auto",
 ) -> DataFrame:
     """Line-level boilerplate removal (the CCNet / RefinedWeb pass:
     Wenzek et al. 2019 §3.1 drop lines duplicated across documents;
@@ -1342,14 +1244,12 @@ def line_dedup(
     lines vastly outnumber repeated chrome — but it is NOT a constant:
     with the default max_df=2 the build side is every line appearing
     in >= 2 documents, and a crawl heavy in exact-duplicate documents
-    makes that a large fraction of the corpus. So ``broadcast``
-    defaults to "auto": no hint, AQE's RUNTIME size statistics convert
-    the join to broadcast only when the boilerplate side actually fits
-    under spark.sql.adaptive.autoBroadcastJoinThreshold, and keep a
-    shuffle hash join on line_h otherwise (identical output, one more
-    exchange, no driver-OOM cliff). "force" restores the unconditional
-    broadcast hint; "never" pins the shuffle join (the posture for a
-    dup-heavy corpus with a small max_df). Reassembly is a per-doc
+    makes that a large fraction of the corpus. So the join carries no
+    hint: AQE's RUNTIME size statistics convert it to broadcast only
+    when the boilerplate side actually fits under
+    spark.sql.adaptive.autoBroadcastJoinThreshold, and keep a shuffle
+    join on line_h otherwise (identical output, one more exchange, no
+    driver-OOM cliff). Reassembly is a per-doc
     sort_array(collect_list(...)) bounded by DOCUMENT size, the same
     bound dedup_spans_remove rides.
     """
@@ -1374,12 +1274,6 @@ def line_dedup(
         .select("line_h")
         .withColumn("__boiler__", F.lit(True))
     )
-    if broadcast == "force":
-        boiler = F.broadcast(boiler)
-    elif broadcast == "never":
-        boiler = boiler.hint("SHUFFLE_MERGE")
-    elif broadcast != "auto":
-        raise ValueError(f"bad broadcast: {broadcast}")
     flagged = keyed.join(boiler, "line_h", "left")
     return (
         flagged.groupBy("doc_id")

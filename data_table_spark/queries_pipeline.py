@@ -328,10 +328,11 @@ def q_minhash_lsh(spark, sf_dir):
 
 @query("minhash_lsh_shuffle", _SQL_JACCARD_EXACT)
 def q_minhash_lsh_shuffle(spark, sf_dir):
-    """minhash_lsh_pairs through the NON-broadcast onepass verifier
-    (broadcast="never": the membership frame shuffle-merge-joins the
-    shingle rows on doc_id) — the 100 TB posture when candidate-pair
-    volume scales with near-dup density past any broadcast threshold
+    """minhash_lsh_pairs with NON-broadcast verification joins
+    (broadcast="never": the candidate pairs shuffle-merge-join the
+    per-doc shingle sets on doc_a and doc_b) — the 100 TB posture when
+    candidate-pair volume scales with near-dup density past any
+    broadcast threshold
     (round-9 verdict "What's wrong" #1). Same oracle as
     minhash_lsh_pairs verbatim: the join strategy cannot change the
     verified pair set."""

@@ -226,8 +226,9 @@ def stream_neardup_screen(
     verification payload (the candidate's shingle set) rides ONLY
     matched candidates, bounded per micro-batch — not the corpus. For
     very hot ingest you'd split verification into a batch job (the
-    onepass roll-up); the screen itself stays stateless map-side work
-    plus one bounded aggregation."""
+    batch `_jaccard_verify` kernel over the screen's candidates); the
+    screen itself stays stateless map-side work plus one bounded
+    aggregation."""
     from pyspark.sql.functions import pandas_udf
 
     from ..pipeline.dedup import (
@@ -236,6 +237,7 @@ def stream_neardup_screen(
         _PERM_B,
         LSH_BANDS,
         LSH_ROWS,
+        _jaccard,
         lsh_band_index,
     )
     from ..pipeline.text import tokens_col, word_shingles
@@ -288,9 +290,10 @@ def stream_neardup_screen(
     cand = bands.join(idx, ["band", "bh"]).filter(
         F.col("match_id") != F.col("doc_id")
     )
-    inter = F.size(F.array_intersect("sh", "match_sh"))
-    jac = inter.cast("double") / (
-        F.size("sh") + F.size("match_sh") - inter
+    jac = _jaccard(
+        F.size(F.array_intersect("sh", "match_sh")),
+        F.size("sh"),
+        F.size("match_sh"),
     )
     ver = cand.select(
         "doc_id", "match_id", jac.alias("jaccard")

@@ -76,7 +76,7 @@ SWEEP = [
     "rleid_chunked",        # run chunk-stitch
     "froll_adaptive_chunked",  # running-triple carry
     "frollapply_chunked",   # halo stitch + Arrow UDF
-    "minhash_lsh_shuffle",  # non-broadcast onepass verifier
+    "minhash_lsh_shuffle",  # non-broadcast verification joins
 ]
 
 # (conf, variant_value) triples; each variant restores the session value

@@ -62,3 +62,28 @@ def test_oracle_coverage_complete():
     assert q == set(_registry())
     assert o <= q
     assert not (q - o), f"queries without oracles: {sorted(q - o)}"
+
+
+def test_slow_list_names_existing_tests():
+    """Every id in tests/slow_tests.txt names a test function that
+    exists. The conftest hook matches ids by string, so a renamed or
+    deleted slow test would otherwise silently lose its `slow` marker
+    and rejoin the default run."""
+    import ast
+
+    missing = []
+    for ln in (REPO / "tests" / "slow_tests.txt").read_text().splitlines():
+        ln = ln.strip()
+        if not ln or ln.startswith("#"):
+            continue
+        path, func = ln.split("::", 1)
+        func = func.split("[", 1)[0]
+        src = REPO / path
+        defined = src.is_file() and func in {
+            node.name
+            for node in ast.parse(src.read_text()).body
+            if isinstance(node, ast.FunctionDef)
+        }
+        if not defined:
+            missing.append(ln)
+    assert not missing, f"slow_tests.txt names no such test: {missing}"

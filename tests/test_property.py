@@ -10,7 +10,7 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -824,6 +824,12 @@ def _checker_sig(pdf):
         max_size=25,
     )
 )
+# DuckDB 1.0.0's DECIMAL->DOUBLE cast is not correctly rounded once the
+# unscaled integer passes 2^53: the exact sum 900719925475.0001 casts to
+# 900719925475.0, while Spark (and DuckDB via VARCHAR) give the nearest
+# double, 900719925475.0001. The oracle side therefore casts through
+# VARCHAR, which parses the exact decimal string with correct rounding.
+@example(rows=[(0, 900719925475.0), (0, 6.103515625e-05)])
 def test_decimal_sum_convention_matches_duckdb(spark, rows):
     pdf = pd.DataFrame(rows, columns=["g", "x"])
     sdf = spark.createDataFrame(pdf)
@@ -839,8 +845,8 @@ def test_decimal_sum_convention_matches_duckdb(spark, rows):
     con = duckdb.connect()
     con.register("t", pdf)
     exp = con.execute(
-        "SELECT g, CAST(SUM(CAST(x AS DECIMAL(18,4))) AS DOUBLE) AS s"
-        " FROM t GROUP BY g"
+        "SELECT g, CAST(CAST(SUM(CAST(x AS DECIMAL(18,4))) AS VARCHAR)"
+        " AS DOUBLE) AS s FROM t GROUP BY g"
     ).fetchdf()
     assert _checker_sig(got) == _checker_sig(exp)
 

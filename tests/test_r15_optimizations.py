@@ -29,6 +29,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+from data_table_spark.pipeline.dedup import (
+    jaccard_prefix_pairs,
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
+    shingle_rows,
+)
 
 
 def _r14_cc_star_labels(edges, max_iter=50):
@@ -210,21 +216,27 @@ def test_stream_checkpoint_location_is_result_invariant(spark, tables):
     assert a == b
 
 
-def test_jaccard_prefix_local_verify_matches_bruteforce(spark, tables):
-    """jaccard_prefix_pairs r15 verification rewrite (array_intersect
-    on per-doc sorted shingle arrays instead of the relational
-    explode-join-aggregate): pin the END-TO-END output against an
-    independent brute-force all-pairs jaccard over the same shingle
-    sets, including bit-identical doubles (|A∩B| is the same exact
-    integer either way, so the one division must agree exactly)."""
-    from data_table_spark.pipeline.dedup import (
-        jaccard_prefix_pairs, shingle_rows,
-    )
+_PAIR_GENERATORS = {
+    "ngram_jaccard_pairs": lambda d: ngram_jaccard_pairs(d, 0.8, 3),
+    "minhash_auto": lambda d: minhash_lsh_pairs(d, 0.8, 3, broadcast="auto"),
+    "minhash_never": lambda d: minhash_lsh_pairs(
+        d, 0.8, 3, broadcast="never"
+    ),
+    "jaccard_prefix_pairs": lambda d: jaccard_prefix_pairs(d, 0.8, 3),
+}
 
+
+@pytest.mark.parametrize("gen", sorted(_PAIR_GENERATORS))
+def test_pair_generator_matches_bruteforce(spark, tables, gen):
+    """Every Jaccard pair generator (both minhash verification-join
+    postures included) against an independent brute-force all-pairs
+    jaccard over the same shingle sets, with bit-identical doubles:
+    |A∩B| is the same exact integer on every path, so the one division
+    must agree exactly. On this corpus every true pair sits at
+    j >= 0.9, where the LSH miss probability is ~1e-7, so minhash must
+    match too."""
     docs = tables["documents"].df
-    got = sorted(
-        map(tuple, jaccard_prefix_pairs(docs, 0.8, 3).collect())
-    )
+    got = sorted(map(tuple, _PAIR_GENERATORS[gen](docs).collect()))
 
     sets: dict = {}
     for doc_id, s in shingle_rows(
@@ -241,4 +253,5 @@ def test_jaccard_prefix_local_verify_matches_bruteforce(spark, tables):
             j = float(inter) / float(len(sets[a]) + len(sets[b]) - inter)
             if j >= 0.8:
                 exp.append((a, b, j))
+    assert exp  # the sf0.001 corpus has true near-dups
     assert got == sorted(exp)
